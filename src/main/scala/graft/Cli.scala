@@ -188,7 +188,8 @@ object Cli {
           println(s"maintenance-status $source: LOCKED by '${st.op}' ($age)")
           println(s"  lock: ${graft.warehouse.MaintenanceLock.lockPath(table)}")
           println("  appends refuse while held. If the maintenance process is dead, " +
-            s"inspect $table (and any $table.old) then `unlock $source --force`.")
+            s"inspect $table, then `unlock $source --force`; the next writer " +
+            "restores a copy the crash left retired.")
           0
       }
     }
@@ -205,13 +206,11 @@ object Cli {
         case None =>
           println(s"unlock $source: no maintenance lock held"); 0
         case Some(st) if !force =>
-          // deliberate friction: the lock may be protecting the only
-          // complete copy of the table (in `.old`) after a crashed
-          // rewrite — same reason clear-table demands --confirm
+          // deliberate friction: a live maintenance may still be
+          // mid-rewrite — same reason clear-table demands --confirm
           System.err.println(
             s"unlock $source: lock held by '${st.op}'. Verify no maintenance " +
-              "process is alive and the table directory is complete, then re-run " +
-              "with --force")
+              "process is alive, then re-run with --force")
           1
         case Some(st) =>
           graft.warehouse.MaintenanceLock.release(fs, table)
@@ -339,42 +338,22 @@ object Cli {
 
   /** Fill NULL start_date/end_date in extraction metadata from the
     * fact table's actual per-run date range — reference
-    * backfill_extraction_dates.py:47-103. Atomic-swap republish, same
-    * protocol as recordMetadata. */
+    * backfill_extraction_dates.py:47-103. Republished through
+    * [[graft.views.Publish.replace]], like recordMetadata; both counts
+    * ride the publishing write. */
   private def backfill(spark: SparkSession, warehouse: String, source: String): Int = {
     if (!Schemas.schemas.contains(source)) {
       System.err.println(s"unknown data source: $source")
       return 1
     }
     val metaPath = s"${warehouse.stripSuffix("/")}/extraction_metadata"
-    // same crash recovery as recordMetadata: a prior run that died
-    // between the two swap renames leaves the only copy at .old
-    val fs0 = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val (t0, o0) = (new org.apache.hadoop.fs.Path(metaPath),
-      new org.apache.hadoop.fs.Path(metaPath + ".old"))
-    if (!fs0.exists(t0) && fs0.exists(o0) && !fs0.rename(o0, t0)) {
-      System.err.println(s"backfill: cannot restore $o0"); return 1
+    val missing = new org.apache.spark.sql.Observation()
+    val rows = graft.views.Publish.replace(spark, metaPath) {
+      graft.incr.Backfill.backfillDates(spark.read.parquet(metaPath),
+        spark.read.parquet(Warehouse.tablePath(warehouse, source)))
+        .observe(missing, count(when(col("start_date").isNull, 1)).as("n"))
     }
-    val meta = spark.read.parquet(metaPath)
-    val fact = spark.read.parquet(Warehouse.tablePath(warehouse, source))
-    val filled = graft.incr.Backfill.backfillDates(meta, fact)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val (tmpP, oldP, tgtP) = (
-      new org.apache.hadoop.fs.Path(metaPath + ".new"),
-      new org.apache.hadoop.fs.Path(metaPath + ".old"),
-      new org.apache.hadoop.fs.Path(metaPath))
-    filled.write.mode("overwrite").parquet(metaPath + ".new")
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (!fs.rename(tgtP, oldP)) {
-      System.err.println(s"backfill: cannot retire $tgtP"); return 1
-    }
-    if (!fs.rename(tmpP, tgtP)) {
-      System.err.println(s"backfill: cannot publish $tmpP"); return 1
-    }
-    fs.delete(oldP, true)
-    val published = spark.read.parquet(metaPath)
-    val remaining = published.filter(col("start_date").isNull).count()
-    println(s"backfill $source: ${published.count()} metadata rows, $remaining still missing dates")
+    println(s"backfill $source: $rows metadata rows, ${missing.get("n")} still missing dates")
     0
   }
 

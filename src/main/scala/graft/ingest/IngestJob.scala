@@ -190,10 +190,10 @@ object IngestJob {
     * `config_snapshot` (run parameters) and `source_urls` (inputs)
     * are carried as JSON strings via `to_json(struct/map/array)`.
     *
-    * The published table is swapped atomically (same rename-to-.old
-    * protocol as [[graft.views.Refresh.refreshView]]): a crash between
-    * steps always leaves a readable table at the published path — never
-    * the delete-then-rename window where no table exists. */
+    * The published table is swapped atomically through
+    * [[graft.views.Publish.replace]]: a crash between steps leaves a
+    * complete copy that the next run restores — never the
+    * delete-then-rename window where no table exists. */
   def recordMetadata(
       spark: SparkSession,
       metadataPath: String,
@@ -217,34 +217,17 @@ object IngestJob {
         typedlit(result.report.sampleErrors).as("sample_errors"))))
       .withColumn("config_snapshot", to_json(typedlit(configSnapshot)))
       .withColumn("source_urls", to_json(typedlit(sourceUrls)))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val tmp = metadataPath + ".new"
-    val old = metadataPath + ".old"
-    val (tmpP, oldP, tgtP) = (
-      new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(old),
-      new org.apache.hadoop.fs.Path(metadataPath))
-    // Crash recovery BEFORE reading: a prior run that died between the
-    // two renames leaves the only copy at .old — restore it, never
-    // delete it, or the whole metadata history silently collapses to
-    // this run's single row.
-    if (!fs.exists(tgtP) && fs.exists(oldP) && !fs.rename(oldP, tgtP)) {
-      throw new java.io.IOException(s"recordMetadata: cannot restore $oldP -> $tgtP")
-    }
-    val merged =
-      if (fs.exists(tgtP)) {
+    // the swap restores a retired copy before this build reads it: a
+    // prior run that died between its renames must not collapse the
+    // whole metadata history to this run's single row
+    graft.views.Publish.replace(spark, metadataPath) {
+      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(new org.apache.hadoop.fs.Path(metadataPath))) {
         IdempotentAppend.mergeLatest(
           spark.read.parquet(metadataPath), row,
           Seq("extraction_run_id"), Seq(col("extraction_timestamp_ms").desc))
       } else row
-    merged.write.mode("overwrite").parquet(tmp)
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (fs.exists(tgtP) && !fs.rename(tgtP, oldP)) {
-      throw new java.io.IOException(s"recordMetadata: cannot retire $tgtP")
     }
-    if (!fs.rename(tmpP, tgtP)) {
-      throw new java.io.IOException(s"recordMetadata: cannot publish $tmpP -> $tgtP")
-    }
-    if (fs.exists(oldP)) fs.delete(oldP, true)
+    ()
   }
 }

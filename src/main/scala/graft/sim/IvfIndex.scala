@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.views.Refresh
+import graft.views.{Publish, Refresh}
 
 /** Persisted, refresh-maintained IVF index — the t30 corpus-stats
   * pattern applied to an ANN index (reference analog: the MV registry
@@ -35,13 +35,14 @@ import graft.views.Refresh
   *   - optional '''PQ component''' (codebooks + per-row codes keyed
   *     by cell) so the IVF-PQ serve path scans only narrow codes and
   *     touches full vectors only in the exact rerank;
-  *   - everything publishes through the M2 atomic swap
-  *     ([[graft.views.Refresh.refreshView]]) — readers never see a
-  *     half-written index — and a one-row meta table, written LAST,
-  *     marks the build valid: [[ensure]] rebuilds whenever the meta
-  *     row is missing or disagrees with (version, params, corpus row
-  *     count), so a crash mid-build (meta deleted first) or a corpus
-  *     change can never serve a stale index silently.
+  *   - everything publishes through the atomic swap
+  *     ([[graft.views.Publish.replace]]) — readers never see a
+  *     half-written index — under the shared persisted-index
+  *     lifecycle ([[graft.views.Publish.ensure]]): a meta marker,
+  *     deleted first and written LAST, marks the build valid, and
+  *     [[ensure]] rebuilds whenever it is missing or disagrees with
+  *     (version, params, corpus row count), so a crash mid-build or a
+  *     corpus change can never serve a stale index silently.
   *
   * At 100 TB: the build is a scheduled refresh job (one KMeans fit on
   * a sample + one assignment scan of the corpus — map-side narrow,
@@ -54,7 +55,7 @@ import graft.views.Refresh
   * Concurrency: [[ensure]] serializes same-index builds WITHIN a JVM
   * (Verify drives queries concurrently); cross-process build races
   * are out of scope, as for every persisted query artifact in this
-  * repo (the driver runs Verify and Bench sequentially).
+  * repo (Verify and Bench run sequentially).
   */
 object IvfIndex {
 
@@ -89,7 +90,7 @@ object IvfIndex {
     def cellsPath: String = Refresh.viewPath(warehouse, s"${name}_cells")
     def codebooksPath: String = Refresh.viewPath(warehouse, s"${name}_codebooks")
     def codesPath: String = Refresh.viewPath(warehouse, s"${name}_codes")
-    def metaPath: String = Refresh.viewPath(warehouse, s"${name}_meta")
+    def metaPath: String = Publish.metaPath(warehouse, name)
   }
 
   /** The scale-adaptive centroid count: k = 2^adaptiveNBits — the
@@ -99,19 +100,13 @@ object IvfIndex {
   def centroidCount(n: Long, p: Params): Int =
     1 << Similarity.adaptiveNBits(n, p.targetList, p.minBits, p.maxBits)
 
-  // One monitor per index root: concurrent queries sharing an index
-  // (Verify runs the map concurrently) build it exactly once.
-  private val buildLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** Return a handle to a valid index for (corpus, params), building
-    * it if absent or stale. Staleness = meta row missing, or any of
-    * (version, ladder params, kmeans params, pq params, corpus row
-    * count) changed. The row count is the cheap drift detector —
-    * exact content fingerprints belong to the upstream ingest, which
-    * is idempotent-keyed ([[graft.sink.IdempotentAppend]]); a
-    * production deployment re-ensures on the refresh cadence like any
-    * M-family view. */
+    * it if absent or stale. Staleness = meta marker missing, or any
+    * entry of [[signature]] changed. The row count is the cheap drift
+    * detector — exact content fingerprints belong to the upstream
+    * ingest, which is idempotent-keyed
+    * ([[graft.sink.IdempotentAppend]]); a production deployment
+    * re-ensures on the refresh cadence like any M-family view. */
   def ensure(
       spark: SparkSession,
       warehouse: String,
@@ -121,66 +116,36 @@ object IvfIndex {
       vecCol: String,
       p: Params,
   ): Handle = {
-    val h0 = Handle(warehouse, name, k = 0)
-    val lock = buildLocks.computeIfAbsent(h0.metaPath, _ => new Object)
-    lock.synchronized {
-      val n = corpus.count()
-      val k = centroidCount(n, p)
-      readMeta(spark, h0) match {
-        case Some(m) if metaMatches(m, n, k, p) => Handle(warehouse, name, k)
-        case _ => build(spark, warehouse, name, corpus, idCol, vecCol, p, n, k)
-      }
-    }
+    val n = corpus.count()
+    val h = Handle(warehouse, name, centroidCount(n, p))
+    Publish.ensure(spark, warehouse, name, signature(n, h.k, p))(
+      build(spark, h, corpus, idCol, vecCol, p, n))
+    h
   }
 
-  private def metaMatches(m: Map[String, Long], n: Long, k: Int, p: Params): Boolean =
-    m.get("version").contains(Version.toLong) &&
-      m.get("n").contains(n) &&
-      m.get("k").contains(k.toLong) &&
-      m.get("target_list").contains(p.targetList) &&
-      m.get("min_bits").contains(p.minBits.toLong) &&
-      m.get("max_bits").contains(p.maxBits.toLong) &&
-      m.get("sample_factor").contains(p.sampleFactor.toLong) &&
-      m.get("min_sample_rows").contains(p.minSampleRows.toLong) &&
-      m.get("kmeans_max_iter").contains(p.kmeansMaxIter.toLong) &&
-      m.get("seed").contains(p.seed) &&
-      m.get("pq_m").contains(p.pq.map(_.m.toLong).getOrElse(-1L)) &&
-      m.get("pq_subdim").contains(p.pq.map(_.subDim.toLong).getOrElse(-1L)) &&
-      m.get("pq_ksub").contains(p.pq.map(_.ksub.toLong).getOrElse(-1L))
-
-  private def readMeta(spark: SparkSession, h: Handle): Option[Map[String, Long]] = {
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(h.metaPath))) None
-    else {
-      val rows = spark.read.parquet(h.metaPath).collect()
-      if (rows.length != 1) None
-      else {
-        val r = rows(0)
-        Some(r.schema.fieldNames.map(f => f -> r.getAs[Long](f)).toMap)
-      }
-    }
-  }
+  /** What a valid build was made from: version, corpus row count,
+    * realized k and every build parameter (-1 for an absent PQ). */
+  private def signature(n: Long, k: Int, p: Params): Seq[(String, Long)] = Seq(
+    "version" -> Version.toLong, "n" -> n, "k" -> k.toLong,
+    "target_list" -> p.targetList, "min_bits" -> p.minBits.toLong,
+    "max_bits" -> p.maxBits.toLong, "sample_factor" -> p.sampleFactor.toLong,
+    "min_sample_rows" -> p.minSampleRows.toLong,
+    "kmeans_max_iter" -> p.kmeansMaxIter.toLong, "seed" -> p.seed,
+    "pq_m" -> p.pq.fold(-1L)(_.m.toLong),
+    "pq_subdim" -> p.pq.fold(-1L)(_.subDim.toLong),
+    "pq_ksub" -> p.pq.fold(-1L)(_.ksub.toLong))
 
   private def build(
       spark: SparkSession,
-      warehouse: String,
-      name: String,
+      h: Handle,
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       p: Params,
       n: Long,
-      k: Int,
-  ): Handle = {
-    require(n > 0, s"cannot build an IVF index over an empty corpus ($name)")
-    val h = Handle(warehouse, name, k)
-    val fs = org.apache.hadoop.fs.FileSystem
-      .get(spark.sparkContext.hadoopConfiguration)
-    // Invalidate FIRST: a crash anywhere below leaves no meta row, so
-    // the next ensure() rebuilds instead of serving a torn index.
-    fs.delete(new org.apache.hadoop.fs.Path(h.metaPath), true)
-
+  ): Unit = {
+    require(n > 0, s"cannot build an IVF index over an empty corpus (${h.name})")
+    val k = h.k
     // KMeans over a bounded sample: ≥ sampleFactor·k rows (KMeans
     // needs comfortably more points than clusters), ≥ minSampleRows
     // for stability at small k, capped at the full corpus.
@@ -190,8 +155,8 @@ object IvfIndex {
       corpus, vecCol, k, sampleFraction = fraction,
       seed = p.seed, maxIter = p.kmeansMaxIter)
 
-    Refresh.refreshView(spark, warehouse, Refresh.ViewJob(s"${name}_centroids",
-      s => s.createDataFrame(cents).toDF("cid", "cvec").repartition(1)))
+    Publish.replace(spark, h.centroidsPath)(
+      spark.createDataFrame(cents).toDF("cid", "cvec").repartition(1))
 
     // One assignment scan feeds BOTH published tables (cells, codes);
     // persist it across the two writes so the k×dim cosine argmax per
@@ -202,37 +167,19 @@ object IvfIndex {
     val doCache = p.pq.isDefined
     if (doCache) assigned.persist()
     try {
-      Refresh.refreshView(spark, warehouse, Refresh.ViewJob(s"${name}_cells",
-        _ => assigned, partitionBy = Seq("cell")))
+      Publish.replace(spark, h.cellsPath, partitionBy = Seq("cell"))(assigned)
       p.pq.foreach { pq =>
         val cb = Similarity.pqCodebooks(
           corpus, vecCol, pq.m, pq.subDim, pq.ksub, pq.maxTrainRows, p.seed)
-        Refresh.refreshView(spark, warehouse, Refresh.ViewJob(s"${name}_codebooks",
-          s => s.createDataFrame(cb).toDF("j", "cid", "cvec").repartition(1)))
-        val encoded = Similarity
+        Publish.replace(spark, h.codebooksPath)(
+          spark.createDataFrame(cb).toDF("j", "cid", "cvec").repartition(1))
+        Publish.replace(spark, h.codesPath, partitionBy = Seq("cell"))(Similarity
           .pqEncode(assigned, vecCol, cb, pq.subDim, "code")
-          .select(col(idCol), col("cell"), col("code"))
-        Refresh.refreshView(spark, warehouse, Refresh.ViewJob(s"${name}_codes",
-          _ => encoded, partitionBy = Seq("cell")))
+          .select(col(idCol), col("cell"), col("code")))
       }
     } finally {
       if (doCache) { assigned.unpersist(); () }
     }
-
-    // Meta LAST: its presence (and agreement) is the validity marker.
-    val meta = Seq((
-      Version.toLong, n, k.toLong, p.targetList, p.minBits.toLong,
-      p.maxBits.toLong, p.sampleFactor.toLong, p.minSampleRows.toLong,
-      p.kmeansMaxIter.toLong, p.seed,
-      p.pq.map(_.m.toLong).getOrElse(-1L),
-      p.pq.map(_.subDim.toLong).getOrElse(-1L),
-      p.pq.map(_.ksub.toLong).getOrElse(-1L)))
-    Refresh.refreshView(spark, warehouse, Refresh.ViewJob(s"${name}_meta",
-      s => s.createDataFrame(meta).toDF(
-        "version", "n", "k", "target_list", "min_bits", "max_bits",
-        "sample_factor", "min_sample_rows", "kmeans_max_iter", "seed",
-        "pq_m", "pq_subdim", "pq_ksub").repartition(1)))
-    h
   }
 
   /** The published centroid table, collected — ≤ k rows by

@@ -182,8 +182,11 @@ object IdempotentAppend {
     if (lock) Some(graft.warehouse.MaintenanceLock.acquireAppend(fs, tablePath))
     else None
     try {
+    // restore, not a bare exists(): a table whose only copy a crashed
+    // maintenance rewrite left retired must be put back and anti-joined
+    // against, not treated as empty
     val toInsert =
-    if (!fs.exists(target)) cached
+    if (!graft.views.Publish.restore(fs, tablePath)) cached
     else {
       val existing = spark.read.parquet(tablePath)
       // Pruning the existing side to the batch's [min, max] window is

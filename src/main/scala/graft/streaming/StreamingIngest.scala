@@ -782,19 +782,14 @@ object StreamingIngest {
     import org.apache.spark.sql.functions._
     val fs = org.apache.hadoop.fs.FileSystem
       .get(spark.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(statePath)
-    if (!fs.exists(p)) 0L
-    else {
-      val warehouse = p.getParent.toString
-      graft.views.Refresh.refreshView(spark, warehouse,
-        graft.views.Refresh.ViewJob(p.getName, { s =>
-          val all = s.read.parquet(statePath)
-          val keep = all.filter(col("batch_id") >= beforeBatchId)
-          val folded = all.filter(col("batch_id") < beforeBatchId)
-            .groupBy(col("stratum")).agg(sum(col("w")).as("w"))
-            .withColumn("batch_id", lit(beforeBatchId - 1))
-          keep.unionByName(folded)
-        }))
+    if (!graft.views.Publish.restore(fs, statePath)) 0L
+    else graft.views.Publish.replace(spark, statePath) {
+      val all = spark.read.parquet(statePath)
+      val keep = all.filter(col("batch_id") >= beforeBatchId)
+      val folded = all.filter(col("batch_id") < beforeBatchId)
+        .groupBy(col("stratum")).agg(sum(col("w")).as("w"))
+        .withColumn("batch_id", lit(beforeBatchId - 1))
+      keep.unionByName(folded)
     }
   }
 

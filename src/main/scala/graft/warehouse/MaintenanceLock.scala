@@ -11,7 +11,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *
   *   - maintenance vs append: [[Warehouse.compact]] /
   *     [[Warehouse.updateSchema]] rewrite a table through a
-  *     snapshot-read → [[Warehouse.publishAtomic]] swap; rows appended
+  *     snapshot-read → [[graft.views.Publish.replace]] swap; rows appended
   *     between the snapshot read and the final rename live only in the
   *     retired `.old` copy and are destroyed when it is dropped.
   *     Maintenance holds the lease ([[withLock]]) for the duration of
@@ -29,9 +29,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *     second append's anti-join sees the first append's rows.
   *
   * Crash recovery is OP-AWARE, recorded in the lock body:
-  *   - a crashed MAINTENANCE leaves the lock held by design — the
-  *     table state must be inspected (`.old` may hold the only
-  *     complete copy) before [[release]] is called manually;
+  *   - a crashed MAINTENANCE leaves the lock held by design — no
+  *     writer touches the table until an operator has confirmed the
+  *     maintenance process is dead and calls [[release]] (CLI `unlock
+  *     --force`). If the crash fell between the swap's two renames,
+  *     the only complete copy sits at `.old`: the next writer (append,
+  *     compact, update-schema) restores it through
+  *     [[graft.views.Publish.restore]] before it reads or lists the
+  *     table, so nothing is lost or hidden;
   *   - a crashed APPEND is safe to self-heal: it left either nothing
   *     or a partial batch that the next idempotent anti-join run
   *     repairs, so an `append` lease older than the staleness bound is
@@ -45,8 +50,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * holder's ownership re-check and its renames; two stealers racing a
   * fresh claimant) are narrowed to microseconds but not closed —
   * closing them needs a catalog with real transactions (or an FS with
-  * compare-and-delete), the same boundary as publishAtomic's reader
-  * note. It turns every silent-corruption scenario into an explicit,
+  * compare-and-delete), the same boundary as the reader note on
+  * [[graft.views.Publish]]. It turns every silent-corruption scenario into an explicit,
   * retryable error for cooperating writers. */
 object MaintenanceLock {
 
@@ -205,12 +210,11 @@ object MaintenanceLock {
   }
 
   /** Run `body` holding the table's maintenance lock. Releases on
-    * SUCCESS only: a failed rewrite can leave `.old` as the table's
-    * only complete copy, and releasing then would let appends run
-    * against (and mkdir over) a broken table — the lock stays held so
-    * every writer keeps refusing until the state is triaged, exactly
-    * the crash story above. Fails fast if another maintenance holds
-    * it. */
+    * SUCCESS only: a failed rewrite may have died mid-swap, and a
+    * failure seen here does not prove the rewriting work has stopped
+    * — the lock stays held so every writer keeps refusing until the
+    * state is triaged, exactly the crash story above. Fails fast if
+    * another maintenance holds it. */
   def withLock[T](fs: FileSystem, tablePath: String, op: String)(body: => T): T = {
     val p = lockPath(tablePath)
     val lease = tryClaim(fs, tablePath, op).getOrElse {

@@ -3,6 +3,7 @@ package graft.warehouse
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.schema.Schemas
+import graft.views.Publish
 
 /** Warehouse lifecycle + export/report sinks (reference operators
   * S5/S6/S8/S9/S10/S11, P19, I5).
@@ -122,31 +123,6 @@ object Warehouse {
     }
   }
 
-  /** Crash-safe republish of a rewritten table: write `.new`, retire
-    * the live copy to `.old`, promote, drop `.old`. A reader never
-    * sees a HALF-written table (each copy is complete before any
-    * rename), and a crash between the renames leaves the only copy at
-    * `.old` (recoverable — same protocol as IngestJob's metadata
-    * swap). NOT reader-atomic: two sequential renames leave a window
-    * where the live path does not exist, so a concurrent reader can
-    * fail with path-not-found and must retry (retryWithBackoff is the
-    * house tool); true atomicity needs a catalog/manifest layer
-    * (Delta/Iceberg territory), out of scope for plain parquet dirs.
-    * The input `df` may READ from `path`: it is fully materialized
-    * into `.new` before the live copy moves. */
-  def publishAtomic(spark: SparkSession, path: String, df: DataFrame): Unit = {
-    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val (tmpP, oldP, tgtP) =
-      (new Path(path + ".new"), new Path(path + ".old"), new Path(path))
-    df.write.mode("overwrite").parquet(path + ".new")
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (fs.exists(tgtP) && !fs.rename(tgtP, oldP))
-      throw new java.io.IOException(s"publishAtomic: cannot retire $tgtP")
-    if (!fs.rename(tmpP, tgtP))
-      throw new java.io.IOException(s"publishAtomic: cannot publish $tmpP")
-    fs.delete(oldP, true)
-  }
-
   /** Outcome of a schema evolution: row count preserved, columns added
     * with NULL backfill, columns whose stored type was re-cast, and
     * stored columns DROPPED because the current declaration no longer
@@ -164,9 +140,10 @@ object Warehouse {
     * Columns the declaration has but the files lack are added as typed
     * NULLs (backfill); columns stored under an older type are cast to
     * the declared one; declared column order is restored. The rewrite
-    * republishes through [[publishAtomic]], so readers see the old or
-    * the new table, never a half-evolved mix (though a reader landing
-    * inside the rename window must retry — see [[publishAtomic]]).
+    * republishes through [[graft.views.Publish.replace]], so readers
+    * see the old or the new table, never a half-evolved mix (though a
+    * reader landing inside the rename window must retry — see
+    * [[graft.views.Publish]]).
     * Stored columns absent from the declaration are REMOVED by the
     * rewrite and reported in [[SchemaUpdate.dropped]]. (VARCHAR width
     * changes are a
@@ -176,6 +153,8 @@ object Warehouse {
     * absorb silently at query time.) */
   def updateSchema(spark: SparkSession, warehouse: String, source: String): SchemaUpdate = {
     val (path, declared) = declaredTable(warehouse, source)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    Publish.restore(fs, path)
     // mergeSchema: files written under different historical schemas
     // must all contribute their columns before reconciliation
     val existing = spark.read.option("mergeSchema", "true").parquet(path)
@@ -188,27 +167,28 @@ object Warehouse {
     // are surfaced in the result (and by the CLI) because the rewrite
     // is irreversible once .old is dropped
     val dropped = existing.schema.fieldNames.filterNot(declared.fieldNames.contains).toSeq
-    if (added.nonEmpty || retyped.nonEmpty ||
-      existing.schema.fieldNames.toSeq != declared.fieldNames.toSeq) {
-      import org.apache.spark.sql.functions.{col, lit}
-      val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      MaintenanceLock.withLock(fs, path, "update-schema") {
-        // The snapshot read happens INSIDE the lock: `spark.read`
-        // lists the table's part-files eagerly, so a frame built from
-        // the inspection read above would be blind to rows a
-        // concurrent append landed since — and publishAtomic would
-        // destroy them with the retired .old. Re-list fresh under
-        // writer exclusion, then rewrite.
-        val fresh = spark.read.option("mergeSchema", "true").parquet(path)
-        val freshHave = fresh.schema.fields.map(f => f.name -> f.dataType).toMap
-        val evolved = fresh.select(declared.fields.map { f =>
-          if (freshHave.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-          else lit(null).cast(f.dataType).as(f.name)
-        }.toIndexedSeq: _*)
-        publishAtomic(spark, path, evolved)
-      }
-    }
-    SchemaUpdate(spark.read.parquet(path).count(), added, retyped, dropped)
+    val rows =
+      if (added.nonEmpty || retyped.nonEmpty ||
+        existing.schema.fieldNames.toSeq != declared.fieldNames.toSeq) {
+        import org.apache.spark.sql.functions.{col, lit}
+        MaintenanceLock.withLock(fs, path, "update-schema") {
+          // The snapshot read happens INSIDE the lock: `spark.read`
+          // lists the table's part-files eagerly, so a frame built from
+          // the inspection read above would be blind to rows a
+          // concurrent append landed since — and the swap would destroy
+          // them with the retired copy. Re-list fresh under writer
+          // exclusion, then rewrite.
+          Publish.replace(spark, path) {
+            val fresh = spark.read.option("mergeSchema", "true").parquet(path)
+            val freshHave = fresh.schema.fields.map(f => f.name -> f.dataType).toMap
+            fresh.select(declared.fields.map { f =>
+              if (freshHave.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+              else lit(null).cast(f.dataType).as(f.name)
+            }.toIndexedSeq: _*)
+          }
+        }
+      } else existing.count()
+    SchemaUpdate(rows, added, retyped, dropped)
   }
 
   /** Outcome of a compaction: parquet part-files before/after and the
@@ -221,8 +201,10 @@ object Warehouse {
     * of loads ends up scan-bound on file-open overhead and driver-side
     * file listing, not bytes. Rewrites the table to
     * ceil(totalBytes / targetFileBytes) partitions via the same
-    * crash-safe [[publishAtomic]] swap the other rewrites use. A no-op
-    * (no rewrite at all) when the table already has that few files.
+    * crash-safe [[graft.views.Publish.replace]] swap the other
+    * rewrites use, after restoring a copy a crashed rewrite left
+    * retired. A no-op (no rewrite at all) when the table already has
+    * that few files.
     * Row content is untouched — compaction is purely physical. The
     * rewrite holds the table's [[MaintenanceLock]]: a concurrent
     * append fails fast (and retries) instead of landing in the live
@@ -234,6 +216,7 @@ object Warehouse {
   ): CompactionResult = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    Publish.restore(fs, path)
     val parts = fs.listStatus(new Path(path))
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
     val totalBytes = parts.map(_.getLen).sum
@@ -247,13 +230,14 @@ object Warehouse {
     // The lock covers snapshot-read -> swap: a concurrent append would
     // otherwise land in the live copy after the read and die with .old
     // (appends check the lock and fail fast instead).
-    MaintenanceLock.withLock(fs, path, "compact") {
-      val df = spark.read.option("mergeSchema", "true").parquet(path)
-      publishAtomic(spark, path, df.repartition(want))
+    val rows = MaintenanceLock.withLock(fs, path, "compact") {
+      Publish.replace(spark, path) {
+        spark.read.option("mergeSchema", "true").parquet(path).repartition(want)
+      }
     }
     val after = fs.listStatus(new Path(path))
       .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    CompactionResult(parts.length, after, spark.read.parquet(path).count())
+    CompactionResult(parts.length, after, rows)
   }
 
   /** S10: truncate with pre-count (reference database.py:910-935). */

@@ -124,24 +124,23 @@ class IngestJobSpec extends SparkSpec {
     assert(parsed == Seq(f))
   }
 
-  test("recordMetadata restores the .old backup left by a crash between renames") {
+  test("a load after a crash mid-swap restores the retired table: history plus new rows") {
     val table = freshTable()
-    val meta = freshTable() + "_meta"
-    val f = write(npp(1767196019683L, "K 1", 1.0))
-    val r = IngestJob.load(spark, "npp", f, table, runId, now)
-    IngestJob.recordMetadata(spark, meta, r, now)
-    // simulate a run that died between retiring the table and
-    // publishing the new one: only .old remains
+    val r1 = IngestJob.load(spark, "npp", write(
+      npp(1767196019683L, "K 1", 1.0), npp(1767196019683L, "K 2", 2.0)), table, runId, now)
+    assert(r1.upsert.inserted == 2)
+    // a maintenance rewrite that died between retiring the table and
+    // promoting its rewrite leaves the only copy at .old
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(meta),
-      new org.apache.hadoop.fs.Path(meta + ".old")))
-    val r2 = r.copy(runId = "650e8400-e29b-41d4-a716-446655440000")
-    IngestJob.recordMetadata(spark, meta, r2, now + 1)
-    val m = spark.read.parquet(meta)
-    // both the recovered history row and the new run survive
-    assert(m.count() == 2)
-    assert(m.select("extraction_run_id").collect().map(_.getString(0)).toSet ==
-      Set(runId, r2.runId))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(table),
+      new org.apache.hadoop.fs.Path(table + ".old")))
+    val r2 = IngestJob.load(spark, "npp", write(
+      npp(1767196019683L, "K 2", 2.0), npp(1767196019683L, "K 3", 3.0)), table, runId, now)
+    // the overlapping key is a duplicate of the restored history
+    assert(r2.upsert.inserted == 1 && r2.upsert.duplicates == 1)
+    assert(spark.read.parquet(table).select("plant_and_unit").as[String](
+      org.apache.spark.sql.Encoders.STRING).collect().sorted.toSeq == Seq("K 1", "K 2", "K 3"))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(table + ".old")))
   }
 
   test("entsoe: present-but-unparseable timestamp is invalid, not inserted with NULL key") {

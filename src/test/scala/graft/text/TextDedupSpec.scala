@@ -167,6 +167,24 @@ class TextDedupSpec extends SparkSpec {
     assert(expected2 != expected)
   }
 
+  test("BucketIndex: a base edited in place at the same row count forces a rebuild") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_bidx_hash").toString
+    val base = Seq(
+      (100L, "the quick brown fox jumps over the lazy dog"),
+      (102L, "some third topic about other things altogether"),
+    ).toDF("doc_id", "text")
+    BucketIndex.ensure(spark, wh, "t", base, "doc_id", "text", 1, 30, 6)
+    val edited = Seq(
+      (100L, "the quick brown fox jumps over the lazy dog"),
+      (102L, "an entirely rewritten body with fresh vocabulary"),
+    ).toDF("doc_id", "text")
+    val h = BucketIndex.ensure(spark, wh, "t", edited, "doc_id", "text", 1, 30, 6)
+    val expected = TextDedup.minhashBuckets(edited, "doc_id", "text", 1, 30, 6)
+      .select("band", "bucket").distinct()
+      .as[(Int, Long)].collect().toSet
+    assert(BucketIndex.buckets(spark, h).as[(Int, Long)].collect().toSet == expected)
+  }
+
   test("repsOfHashed ≡ groupBy(_fp).agg(min(id), first(sh)) on a dup-heavy corpus") {
     val corpus = Seq(
       (7L, "alpha beta gamma"), (3L, "alpha  BETA gamma"), (9L, "alpha beta gamma"),
