@@ -10,9 +10,11 @@ object Defaults {
       math.min(32, Runtime.getRuntime.availableProcessors).toString)
 
   /** The graft session profile — ONE definition of the SparkSession
-    * config every entrypoint (Bench/Verify/Probe/Cli) starts from, and
-    * the builder a USER session on a decade-scale corpus should start
-    * from too (ARCHITECTURE.md deployment notes):
+    * config every entrypoint (Bench/Verify/Probe/QProf/PlanDump/Cli/
+    * StreamBench/SynthScale, perfbench) and the test suite's shared
+    * session (SparkSpec) start from, and the builder a USER session on
+    * a decade-scale corpus should start from too (ARCHITECTURE.md
+    * deployment notes; SessionProfileSpec keeps it the only builder):
     *
     *   - shuffle partitions = worker threads (local mode; a cluster
     *     deployment overrides with its executor-core total);

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Model-based quality filtering: a bag-of-words logistic-regression
   * classifier trained IN Spark against a weak heuristic label, then
@@ -105,7 +106,10 @@ object QualityClassifier {
     // — exact and order-free — and the collected vocab rows are
     // re-sorted on the driver with the same (df desc, token)
     // comparator, so vocabulary order is independent of union
-    // partition order. The collect stays bounded by topV + 1.
+    // partition order. "Same" means the engine's string order: UTF-8
+    // bytes (UTF8String), not java.lang.String's UTF-16 code units,
+    // which disagree for supplementary-plane tokens. The collect stays
+    // bounded by topV + 1.
     val collected = tfAll
       .join(labels, Seq(idCol))
       .groupBy(col("token"))
@@ -124,7 +128,7 @@ object QualityClassifier {
     val n = sentinel.head.getLong(1).max(1L)
     val nPos = if (sentinel.head.isNullAt(2)) 0.0 else sentinel.head.getDouble(2)
     val vocabCf: Array[(String, Double, Double)] = vocabRows
-      .sortBy(r => (-r.getLong(1), r.getString(0)))
+      .sortBy(r => (-r.getLong(1), UTF8String.fromString(r.getString(0))))
       .map(r => (r.getString(0), r.getDouble(2), r.getDouble(3)))
     val vocab: Array[String] = vocabCf.map(_._1)
     // Every aggregate below runs on the vocab-restricted rows, so all

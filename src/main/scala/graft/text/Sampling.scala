@@ -451,8 +451,8 @@ object Sampling {
     * (score desc, key) is contained in the union of the per-salt
     * top-caps (any globally-kept row is in its own bucket's top-cap),
     * and level 2 applies the SAME total order — SamplingSpec pins
-    * bucketed ≡ plain row-for-row; CapSkewBench commits the measured
-    * hot-domain point. */
+    * bucketed ≡ plain row-for-row; MEASUREMENTS_R12.json
+    * `domain_cap_skew` holds the measured hot-domain point. */
   def capPerStratumBucketed(
       docs: DataFrame,
       stratumCol: Column,

@@ -75,4 +75,25 @@ class QualityClassifierSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq
     assert(v == v2)
   }
+
+  test("training vocabulary order equals the engine's (df desc, token) order") {
+    // Equal-df tokens whose UTF-16 order (java.lang.String) and UTF-8
+    // byte order (the engine's) disagree: U+10428 DESERET SMALL LONG I
+    // is a surrogate pair D801 DC28 (< U+FF41 in UTF-16) but encodes as
+    // F0 90 90 A8 (> EF BD 81, U+FF41 FULLWIDTH SMALL A, in UTF-8).
+    val deseret = new String(Character.toChars(0x10428))
+    val fullwidth = "\uFF41"
+    val docs = (0L until 8L).map { i =>
+      (i, s"$deseret $fullwidth" + (if (i % 2 == 0) " alpha" else ""), i % 2 == 0)
+    }.toDF("doc_id", "text", "label")
+    val toks = docs.select(call_function("graft_tokens", col("text")))
+      .head().getSeq[String](0)
+    assert(toks.take(2) == Seq(deseret, fullwidth),
+      s"tokenizer must keep both letters as tokens, got $toks")
+    val engine = QualityClassifier.vocabulary(docs, "doc_id", "text", 8)
+      .collect().map(_.getString(0)).toSeq
+    assert(engine.take(2) == Seq(fullwidth, deseret))
+    val model = QualityClassifier.train(docs, "doc_id", "text", "label", topV = 8, steps = 1)
+    assert(model.weights.map(_._1) == engine)
+  }
 }

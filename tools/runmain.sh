@@ -19,8 +19,7 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# GRAFT_JAVA_OPTS: extra JVM flags (e.g. -Dgraft.append.lock=false for
-# the bench lease-cost isolation run).
+# GRAFT_JAVA_OPTS: extra JVM flags (e.g. -Xlog:gc* to log GC pauses).
 exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
